@@ -22,12 +22,17 @@ broadcast cache dict (north-star requirement).
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
+from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .udfs import TRIPLES_SCHEMA, make_pages_to_triples
+
+_log = logging.getLogger(__name__)
 
 LINEAGE_COLS = [
     "run_id",
@@ -99,14 +104,26 @@ def parallelize_small_input(
     JSON-LD Python stage, shingle+collect_list) keep the default 0."""
     spark = df.sparkSession
     para = spark.sparkContext.defaultParallelism
+    limit = para * max_bytes_per_core
     try:
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
-    except Exception:  # noqa: BLE001 — stats are advisory; never fail the plan
+    except (Py4JError, CapturedException, ValueError) as e:
+        # stats are advisory; a JVM-side failure (raw or converted by
+        # pyspark) or an unparsable size never fails the plan
+        _log.debug("small-input gate: no size estimate (%s); input kept", e)
         return df
-    if min_bytes <= size <= para * max_bytes_per_core:
+    if min_bytes <= size <= limit:
+        _log.debug(
+            "small-input gate: %d B in [%d, %d] B; repartition(%d)",
+            size, min_bytes, limit, para,
+        )
         return df.repartition(para)
+    _log.debug(
+        "small-input gate: %d B outside [%d, %d] B; input kept",
+        size, min_bytes, limit,
+    )
     return df
 
 

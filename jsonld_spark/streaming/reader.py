@@ -552,9 +552,16 @@ def make_streaming_pages_to_triples(
     import pandas as pd
 
     from ..sources.html_jsonld import extract_jsonld
-    from ..udfs import TRIPLE_COLS, _get_cache, salt_bnode, salt_quad_to_row
+    from ..udfs import (
+        TRIPLE_COLS,
+        _drop_zip_finders,
+        _get_cache,
+        salt_bnode,
+        salt_quad_to_row,
+    )
 
     def fn(batches):
+        _drop_zip_finders()
         entries = cache_bc.value if cache_bc is not None else None
         cache = _get_cache(entries, cache_version)
         out: list[tuple] = []

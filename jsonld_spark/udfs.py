@@ -20,6 +20,8 @@ from __future__ import annotations
 import hashlib
 import json
 import re as _re
+import sys
+import zipimport
 from typing import Iterator
 
 from pyspark.sql import types as T
@@ -211,6 +213,18 @@ def page_to_rows(
     return rows
 
 
+def _drop_zip_finders() -> None:
+    """Forget cached zip finders (pyspark.zip, the spark-core jar).  A
+    reused worker calls ``importlib.invalidate_caches()`` before every
+    task, which on CPython 3.10-3.12 re-reads each cached zipimporter's
+    whole archive directory (~0.2 s a task).  Loaded modules keep their
+    loaders; a later import rebuilds its finder from zipimport's
+    directory cache without re-reading the archive."""
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
+
+
 def make_pages_to_triples(
     cache_bc,
     cache_version: str = "v0",
@@ -225,6 +239,7 @@ def make_pages_to_triples(
     import pandas as pd
 
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        _drop_zip_finders()
         entries = cache_bc.value if cache_bc is not None else None
         cache = _get_cache(entries, cache_version)
         for pdf in batches:

@@ -563,3 +563,46 @@ def test_extract_links_survives_malformed_utf8(spark):
     assert {r.href for r in extract_links(df).collect()} == {
         "http://m.example/x"
     }
+
+
+def test_errors_default_keeps_oversized_scriptless_row(spark, pipe, monkeypatch):
+    """``errors()`` defaults to ``skip_scriptless=False``: an oversized
+    page with no ld+json still yields its ``document too large`` row,
+    which the ``extract()`` pre-filter drops.  The size limit is lowered
+    to 1 KB so the page stays small."""
+    import functools
+
+    import jsonld_spark.pipeline as pipeline_mod
+
+    monkeypatch.setattr(
+        pipeline_mod,
+        "make_pages_to_triples",
+        functools.partial(pipeline_mod.make_pages_to_triples, max_html_bytes=1024),
+    )
+    big = b"<html><body>" + b"<p>no structured data here</p>" * 100 + b"</body></html>"
+    df = spark.createDataFrame(
+        [("http://big.example/p", big)], "url string, html binary"
+    )
+    rows = pipe.errors(df).collect()
+    assert [r.url for r in rows] == ["http://big.example/p"]
+    assert rows[0].error.startswith("document too large")
+    assert pipe.extract(df).count() == 0  # the documented divergence
+
+
+def test_parallelize_small_input_logs_branch(spark, caplog):
+    """The small-input gate reports its branch, size estimate and
+    threshold at debug level; its decisions are unchanged."""
+    import logging
+
+    from jsonld_spark.pipeline import parallelize_small_input
+
+    df = spark.range(100)
+    para = spark.sparkContext.defaultParallelism
+    with caplog.at_level(logging.DEBUG, logger="jsonld_spark.pipeline"):
+        small = parallelize_small_input(df)
+        kept = parallelize_small_input(df, max_bytes_per_core=0)
+    assert small.rdd.getNumPartitions() == para
+    assert kept is df
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any(f"; repartition({para})" in m for m in msgs)
+    assert any("outside [0, 0] B; input kept" in m for m in msgs)
