@@ -114,17 +114,12 @@ def parallelize_small_input(
         # pyspark) or an unparsable size never fails the plan
         _log.debug("small-input gate: no size estimate (%s); input kept", e)
         return df
-    if min_bytes <= size <= limit:
-        _log.debug(
-            "small-input gate: %d B in [%d, %d] B; repartition(%d)",
-            size, min_bytes, limit, para,
-        )
-        return df.repartition(para)
+    fire = min_bytes <= size <= limit
     _log.debug(
-        "small-input gate: %d B outside [%d, %d] B; input kept",
-        size, min_bytes, limit,
+        "small-input gate: %d B vs [%d, %d] B; %s",
+        size, min_bytes, limit, f"repartition({para})" if fire else "input kept",
     )
-    return df
+    return df.repartition(para) if fire else df
 
 
 class KGPipeline:
